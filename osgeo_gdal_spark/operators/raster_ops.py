@@ -409,12 +409,20 @@ def _cover_sql(transform, world):
         sy = lambda Y: f"({D(c)} * {Y} + {D(d)})"  # noqa: E731
     elif kind == "geodetic":
         sx = lambda X: f"(CAST({X} AS DOUBLE))"  # noqa: E731
-        sy = lambda Y: (  # merc chain; clamp the pole overflow to +-2*world
-            f"(LEAST(CAST({2 * world} AS DOUBLE), GREATEST(CAST({-2 * world} AS DOUBLE), "
+        lat = lambda Y: (  # noqa: E731
+            f"(90.0 - ({Y} + CAST(0.5 AS DOUBLE)) / {world} * 180.0)")
+        # merc chain; clamp the pole overflow to +-2*world. A corner at or
+        # past a pole has no mercator y (LN of a non-positive TAN is
+        # NULL, which GREATEST would skip), so it maps to its own pole's
+        # end: the south pole to +2*world, the north pole to -2*world
+        sy = lambda Y: (  # noqa: E731
+            f"(CASE WHEN {lat(Y)} <= -90.0 THEN CAST({2 * world} AS DOUBLE) "
+            f"WHEN {lat(Y)} >= 90.0 THEN CAST({-2 * world} AS DOUBLE) "
+            f"ELSE LEAST(CAST({2 * world} AS DOUBLE), GREATEST(CAST({-2 * world} AS DOUBLE), "
             f"(CAST(1.0 AS DOUBLE) - LN(TAN(PI()/4.0 + "
-            f"RADIANS(90.0 - ({Y} + CAST(0.5 AS DOUBLE)) / {world} * 180.0) / 2.0)) / PI()) "
-            f"/ CAST(2.0 AS DOUBLE) * {world} - CAST(0.5 AS DOUBLE))))"
-        )  # noqa: E731
+            f"RADIANS({lat(Y)}) / 2.0)) / PI()) "
+            f"/ CAST(2.0 AS DOUBLE) * {world} - CAST(0.5 AS DOUBLE))) END)"
+        )
     else:
         raise ValueError(kind)
     return sx, sy

@@ -220,8 +220,7 @@ class Pipeline:
 
     def materialize(self, writer, stage: str):        # `materialize`
         df = self._df
-        writer.run_stage(stage, ["all"], lambda _u: df)
-        self._df = writer.read_stage(stage)
+        self._df = writer.run_stage(stage, ["all"], lambda _u: df)
         return self
 
     def write(self, path: str, partition_by=None, fmt="parquet"):  # `write`

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
+
+_log = logging.getLogger(__name__)
 
 
 def get_spark(app="osgeo-gdal-spark", cores=None, shuffle_partitions=None,
@@ -79,6 +84,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+#: ``local_df`` calls that left the Arrow path for the pickled-row
+#: Python-RDD ``createDataFrame``; each one is also logged. Driver-built
+#: tables (join covers, StageWriter metrics rows, ...) should keep it at 0.
+local_df_fallbacks = 0
+_fallbacks_lock = threading.Lock()
+
+
 def local_df(spark: SparkSession, rows, schema):
     """``createDataFrame`` for DRIVER-BUILT local tables, routed through
     pandas + Arrow. The plain-list path parallelizes PICKLED rows into a
@@ -86,17 +98,29 @@ def local_df(spark: SparkSession, rows, schema):
     worker per partition just to deserialize the rows (measured ~0.13 s
     per task on this VM; the flagship join paid two such 32-task stages
     per run). The Arrow path yields a JVM-side local relation with exact
-    size stats (so broadcast decisions see the true size). Falls back to
-    the classic path for rows pandas/Arrow cannot represent faithfully
-    (the caller loses nothing but the speedup)."""
-    try:
-        import pandas as pd
+    size stats (so broadcast decisions see the true size), empty tables
+    included. Rows pandas/Arrow cannot represent faithfully fall back to
+    the classic path; each such fallback is logged and counted in
+    ``local_df_fallbacks``.
 
-        names = (schema.fieldNames() if hasattr(schema, "fieldNames")
-                 else None)
-        pdf = pd.DataFrame(list(rows), columns=names)
-        if len(pdf) == 0:
-            return spark.createDataFrame(rows, schema)
-        return spark.createDataFrame(pdf, schema)
-    except Exception:
+    The Arrow conversion is called directly: ``createDataFrame(pdf)``
+    would catch an Arrow error itself and fall back with only a warning,
+    so the fallback could not be counted here."""
+    global local_df_fallbacks
+    import pandas as pd
+    import pyarrow as pa
+
+    rows = list(rows)
+    struct = (schema if isinstance(schema, StructType)
+              else _parse_datatype_string(schema))
+    try:
+        pdf = pd.DataFrame(rows, columns=struct.fieldNames())
+        return spark._create_from_pandas_with_arrow(
+            pdf, struct, spark._jconf.sessionLocalTimeZone())
+    except (ValueError, TypeError, pa.ArrowException) as e:
+        with _fallbacks_lock:
+            local_df_fallbacks += 1
+        _log.warning("local_df: Arrow conversion failed (%s: %s); falling "
+                     "back to the Python-RDD createDataFrame",
+                     type(e).__name__, e)
         return spark.createDataFrame(rows, schema)

@@ -213,15 +213,15 @@ def test_contour_sparse_tile_table_no_nan_segments(spark, tiles):
     assert got == want and len(want) > 100
 
 
-def test_warp_reproject_geodetic_matches_closed_form(spark, tiles):
-    """Reprojection warp vs driver-side closed form: every valid dst pixel
-    equals the bilinear sample of the generator at the reprojected coords;
-    poleward rows (|lat| beyond the mercator limit) are nodata."""
-    world = 512
-    out = {(r["gx"], r["gy"]): RS.parse_tile(r)
-           for r in RO.warp_reproject_geodetic(tiles, 1).collect()}
-    assert len(out) == 4
-    gen = lambda x, y: ((x * 7 + y * 11 + 1) % 255).astype(float)  # noqa: E731
+def _check_geodetic_closed_form(warped, zoom):
+    """Every valid dst pixel of a geodetic warp equals the bilinear sample
+    of the generator at the reprojected coords; poleward rows (|lat|
+    beyond the mercator limit) are nodata."""
+    n = 1 << zoom
+    world = n * 256
+    out = {(r["gx"], r["gy"]): RS.parse_tile(r) for r in warped.collect()}
+    assert len(out) == n * n
+    gen = lambda x, y: ((x * 7 + y * 11 + zoom) % 255).astype(float)  # noqa: E731
     got = np.zeros((world, world))
     for (gx, gy), g in out.items():
         got[gy*256:(gy+1)*256, gx*256:(gx+1)*256] = g
@@ -244,6 +244,21 @@ def test_warp_reproject_geodetic_matches_closed_form(spark, tiles):
     np.testing.assert_allclose(got[valid], want[valid], atol=1e-9)
     # out-of-mercator rows are nodata
     assert (got[~valid] == 0.0).all() and (~valid).sum() > 1000
+
+
+def test_warp_reproject_geodetic_matches_closed_form(spark, tiles):
+    """Reprojection warp vs driver-side closed form at zoom 1."""
+    _check_geodetic_closed_form(RO.warp_reproject_geodetic(tiles, 1), 1)
+
+
+@pytest.mark.parametrize("zoom", [0, 2])
+def test_warp_reproject_geodetic_pole_corner_matches_closed_form(spark, zoom):
+    """The bottom dst row's lower corner lies past the south pole; its src
+    cover must still reach the southern src tiles. It used to clamp to
+    the north end: zoom 0 returned no tile at all, and zoom 2's bottom
+    row sampled the wrong src tiles."""
+    tiles = RS.synth_tiles(spark, zoom)
+    _check_geodetic_closed_form(RO.warp_reproject_geodetic(tiles, zoom), zoom)
 
 
 def test_reduce_2x2_modes():

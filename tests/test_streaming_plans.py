@@ -99,6 +99,88 @@ def test_lineage_checkpoint_and_resume(spark, tmpdir):
     assert calls == ["4"]
 
 
+
+def test_lineage_unit_cost_is_three_jobs(spark, tmpdir):
+    """One fresh unit costs the data write, the metrics-row write and the
+    caller's read_stage collect: no read-back count, no Python-RDD
+    metrics row, no schema inference job."""
+    w = StageWriter(spark, tmpdir, run_id="r1")
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage_unit_cost", "one fresh StageWriter unit")
+    try:
+        rows = w.run_stage("cost", ["a"], lambda _u: spark.range(3)).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("lineage_unit_cost")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 3
+    assert len(jobs) <= 3, jobs
+
+
+def test_lineage_rows_observed_from_write(spark, tmpdir):
+    """The metrics `rows` equals the rows written, empty units included,
+    and read_stage returns the same columns, types and rows whether the
+    writer knows the schema or a fresh writer infers it."""
+    frames = {
+        "full": spark.range(7).withColumn("v", F.col("id") * 2),
+        "range0": spark.range(0).withColumn("v", F.col("id") * 2),
+        "filtered": spark.range(5).withColumn("v", F.col("id") * 2)
+        .filter("id > 10"),
+    }
+    w = StageWriter(spark, tmpdir, run_id="r1")
+    mine = w.run_stage("rows", list(frames), lambda u: frames[u])
+    got = {r["unit_id"]: r["rows"] for r in w.metrics("rows").collect()}
+    assert got == {"full": 7, "range0": 0, "filtered": 0}
+    on_disk = {r["unit_id"]: r["count"]
+               for r in mine.groupBy("unit_id").count().collect()}
+    assert on_disk == {"full": 7}
+    fresh = StageWriter(spark, tmpdir, run_id="r2").read_stage("rows")
+    assert mine.schema == fresh.schema
+    assert mine.columns == ["id", "v", "unit_id", "run_id"]
+    assert sorted(mine.collect()) == sorted(fresh.collect())
+
+
+def test_lineage_unreadable_metrics_raise(spark, tmpdir):
+    """A metrics table that exists but cannot be read must stop the
+    stage, not silently re-run every unit."""
+    import os
+
+    from osgeo_gdal_spark.plans.lineage import StageMetricsError
+
+    w = StageWriter(spark, tmpdir, run_id="r1")
+    w.run_stage("bad", ["1"], lambda _u: spark.range(2))
+    with open(os.path.join(tmpdir, "bad", "_metrics", "garbage.parquet"),
+              "wb") as f:
+        f.write(b"this is not parquet")
+    calls = []
+
+    def build(unit):
+        calls.append(unit)
+        return spark.range(2)
+
+    with pytest.raises(StageMetricsError):
+        w.run_stage("bad", ["1", "2"], build)
+    assert calls == []
+
+
+def test_local_df_fallback_counted(spark, monkeypatch):
+    """An Arrow conversion failure falls back to the Python-RDD path and
+    is counted, so driver tables cannot leave the Arrow path unseen."""
+    import pyarrow as pa
+
+    from osgeo_gdal_spark import session as S
+
+    def fail(*_a, **_k):
+        raise pa.ArrowInvalid("forced")
+
+    before = S.local_df_fallbacks
+    assert S.local_df(spark, [(1, "x")], "a LONG, b STRING").collect() \
+        == [(1, "x")]
+    assert S.local_df_fallbacks == before
+    monkeypatch.setattr(spark, "_create_from_pandas_with_arrow", fail)
+    df = S.local_df(spark, [(1, "x"), (2, None)], "a LONG, b STRING")
+    assert S.local_df_fallbacks == before + 1
+    assert sorted(df.collect()) == [(1, "x"), (2, None)]
+
 def test_pipeline_chain_matches_direct(spark):
     p = (
         Pipeline(spark)
